@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** The one `private[spark]` call the benchmark needs: listener events are
+  * delivered asynchronously, so counters are read only after the bus has
+  * delivered everything posted so far.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
