@@ -683,11 +683,13 @@ object ScaleStress {
     // move only state rows — 10x docs must cost ~the extra scans alone
     def sidecar(d: org.apache.spark.sql.DataFrame): Long = {
       import graft.operators.SketchSidecar
+      val hll = new graft.functions.HllSketch(8)
       val st = (0 to 2).map(i =>
-          SketchSidecar.hllState(d.where(col("doc_id") % 3 === i),
-            "text", p = 8))
-        .reduce(SketchSidecar.mergeHll)
-      SketchSidecar.hllEstimate(st, p = 8).count()
+          SketchSidecar.state(hll, d.where(col("doc_id") % 3 === i),
+            graft.operators.Dedup.portableHash(
+              concat(lit("hll:"), col("text").cast("string")))))
+        .reduce(SketchSidecar.merge(hll))
+      SketchSidecar.readOff(hll, st).count()
     }
     time("sidecar-hll 1x (5k docs)")(sidecar(d1))
     time("sidecar-hll 10x (50k docs)")(sidecar(d10))

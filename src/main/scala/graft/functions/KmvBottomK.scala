@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, expr, when}
 
 import scala.collection.mutable
 
@@ -33,8 +35,8 @@ class KmvBottomK(k: Int)
   require(k >= 2, "k must be >= 2")
 
   // buffer invariant: sorted ascending, distinct, length <= k (a sorted
-  // ArrayBuffer, not TreeSet — kryo round-trips ordered sets as plain
-  // HashSet, silently dropping the comparator)
+  // ArrayBuffer, not TreeSet: it encodes natively as array<bigint>, the
+  // durable on-disk form of the SketchSidecar state)
   override def zero: mutable.ArrayBuffer[Long] =
     mutable.ArrayBuffer.empty[Long]
 
@@ -63,12 +65,21 @@ class KmvBottomK(k: Int)
     (buf.length.toLong, if (buf.isEmpty) 0L else buf.last)
 
   override def bufferEncoder: Encoder[mutable.ArrayBuffer[Long]] =
-    Encoders.kryo[mutable.ArrayBuffer[Long]]
+    ExpressionEncoder[mutable.ArrayBuffer[Long]]()
   override def outputEncoder: Encoder[(Long, Long)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 }
 
 object KmvBottomK {
+  /** The distinct-count estimate over columns `n_kept` and `h_k` (the
+    * aggregate's output, named): exact below k, else the floor of
+    * (k−1)·2⁶⁰ ⁄ h_k, computed in DECIMAL(38,0).
+    */
+  def estimate(k: Int): Column =
+    when(col("n_kept") < k, col("n_kept")).otherwise(
+      expr(s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * 1152921504606846976)" +
+        " div h_k AS BIGINT)"))
+
   /** SQL-name registration (the [[TopK]]/[[CountMin]] pattern):
     * `kmv_bottom_k<k>(hash)` per size, for SQL-only clients. Input is the
     * portableHash long; output the (n_kept, h_k) struct — the estimate

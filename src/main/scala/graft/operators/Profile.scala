@@ -1596,9 +1596,7 @@ object Profile {
     val bottom = hashes.orderBy(col("h")).limit(k)
     val sketch = bottom.agg(count(lit(1)).as("n_kept"), max(col("h")).as("h_k"))
       .select(col("n_kept"), col("h_k"),
-        when(col("n_kept") < k, col("n_kept")).otherwise(
-          expr(s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * 1152921504606846976)" +
-            " div h_k AS BIGINT)")).as("est_distinct"))
+        graft.functions.KmvBottomK.estimate(k).as("est_distinct"))
     sketch.crossJoin(broadcast(keys.agg(count(lit(1)).as("n_exact"))))
   }
 

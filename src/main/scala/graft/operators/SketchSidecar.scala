@@ -1,195 +1,91 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.col
 
-/** SKETCH SIDECAR LIFECYCLE — persist the portable sketches' mergeable
-  * state (HLL registers, KMV bottom-k samples, KLL level samples) as
-  * parquet tables and fold each ingest batch in incrementally, so a
+import scala.reflect.runtime.universe.TypeTag
+
+/** SKETCH SIDECAR LIFECYCLE — persist a mergeable sketch's state as a
+  * parquet table and fold each ingest batch in incrementally, so a
   * corpus-wide distinct/quantile profile updates in O(batch) instead of
   * an O(corpus) rescan (VERDICT r13 item 5 — the `_graft_codebook`
   * sidecar posture from [[Similarity.streamingIvfRefresh]] applied to
   * the sketch rack).
   *
-  * Every state here is a pure function of the input MULTISET and merges
-  * associatively/commutatively, so fold order over batches can never
-  * change the published estimate — the merged sidecar's read-off is
-  * spec-pinned EQUAL to the one-shot operator over the full corpus
-  * ([[Profile.hllDistinct]] / [[Profile.kmvDistinct]] /
-  * [[Profile.kllQuantile]]), which is what makes the merge chain itself
-  * oracle-checkable: the gate replays three deterministic ingest batches
-  * through the fold and hash-checks against the FULL-corpus DuckDB
-  * replay.
+  * There is no sketch-specific code here: the sketch IS its
+  * [[org.apache.spark.sql.expressions.Aggregator]] — `zero` and `merge`
+  * are the monoid (law-tested in `MonoidLawsSpec`), `reduce` lifts one
+  * input into it, `finish` reads it off. The same [[graft.functions
+  * .HllSketch]], [[graft.functions.KmvBottomK]] and [[graft.functions
+  * .KllSketch]] instances serve the GROUP BY SQL names, the
+  * `EventStreams` windows and this sidecar, so the published estimate
+  * is by construction the one-shot aggregate's (spec-pinned EQUAL to
+  * [[Profile.hllDistinct]] / [[Profile.kmvDistinct]] /
+  * [[Profile.kllQuantile]] over the full corpus, which is what makes
+  * the merge chain oracle-checkable: the gate replays three
+  * deterministic ingest batches through the fold and hash-checks
+  * against the FULL-corpus DuckDB replay).
+  *
+  * State format: a state table is ONE row whose schema is the sketch's
+  * `bufferEncoder` — plain parquet columns, no JVM-serialized blobs.
+  * HLL is one `binary` column `value` (the 2^p register bytes), KMV one
+  * `array<bigint>` column `value` (the ≤ k smallest distinct hashes,
+  * ascending), KLL the `KllBuf` fields (`level`, `n`, `lvls` binary,
+  * `vs` array<double>). An empty batch yields the sketch's `zero`.
   *
   * Scale shape: a batch state build is one scan of the BATCH (never the
-  * corpus) down to model-sized rows (≤2^p registers, ≤k hashes, ≤k+ε
-  * level samples); a merge moves only state rows. The parquet update is
-  * write-to-temp + rename-swap (the [[Similarity.compactIvfIndex]]
-  * discipline), so a concurrent reader sees the old state or the new —
-  * never a partial table.
+  * corpus) down to the model-sized buffer; a merge moves only state
+  * rows. The parquet update is write-to-temp + rename-swap (the
+  * [[Similarity.compactIvfIndex]] discipline), so a concurrent reader
+  * sees the old state or the new — never a partial table.
   */
 object SketchSidecar {
 
-  // ---------------------------------------------------------------- HLL
-
-  /** HLL register state of ONE batch: (reg, mj) rows, the same md5
-    * family / bin()-ρ math as [[Profile.hllDistinct]] (whose scaladoc
-    * carries the derivation). ≤ 2^p rows regardless of batch size.
+  /** The sketch's own fold with its buffer as the output: `zero` and
+    * `merge` are the sketch's, `step` is its `reduce` (building a state
+    * from inputs) or its `merge` (folding state rows), `finish` is the
+    * identity.
     */
-  def hllState(df: DataFrame, keyCol: String, p: Int = 8): DataFrame = {
-    require(p >= 4 && p <= 14, s"p must be in [4,14], got $p")
-    val wBits = 60 - p
-    df.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull).distinct()
-      .select(Dedup.portableHash(concat(lit("hll:"), col("key"))).as("h"))
-      .select(expr(s"h DIV ${1L << wBits}").as("reg"),
-        pmod(col("h"), lit(1L << wBits)).as("w"))
-      .select(col("reg"),
-        when(col("w") === 0L, lit((wBits + 1).toLong))
-          .otherwise(lit((wBits + 1).toLong) -
-            length(ltrim(bin(col("w")), "0"))).as("rho"))
-      .groupBy(col("reg")).agg(max(col("rho")).as("mj"))
+  private class StateFold[IN, S](sketch: Aggregator[_, S, _],
+      step: (S, IN) => S) extends Aggregator[IN, S, S] {
+    override def zero: S = sketch.zero
+    override def reduce(s: S, in: IN): S = step(s, in)
+    override def merge(a: S, b: S): S = sketch.merge(a, b)
+    override def finish(s: S): S = s
+    override def bufferEncoder: Encoder[S] = sketch.bufferEncoder
+    override def outputEncoder: Encoder[S] = sketch.bufferEncoder
   }
 
-  /** Register-table merge: per-register max — the HLL monoid. */
-  def mergeHll(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("reg")).agg(max(col("mj")).as("mj"))
+  private def fold[IN, S](ds: Dataset[IN], agg: StateFold[IN, S]): DataFrame =
+    ds.select(agg.toColumn.name("value")).toDF()
 
-  /** Estimate read-off from a (merged) register state — identical
-    * fixed-point fold to [[Profile.hllDistinct]] minus its exact-count
-    * twin; returns one row (m, v_zero, t_fx, est_raw).
+  /** State of ONE batch: `inputs` are mapped positionally onto the
+    * sketch's input type (e.g. the portable hash for HLL/KMV, the
+    * (hash, value) pair for KLL); rows with a null input are dropped
+    * first, since the sketches take primitive inputs.
     */
-  def hllEstimate(state: DataFrame, p: Int = 8): DataFrame = {
-    val m = 1L << p
-    val wBits = 60 - p
-    val alphaMicro = Profile.hllAlphaMicro(p)
-    state.agg(
-        count(lit(1)).as("n_present"),
-        coalesce(sum(expr(
-            s"shiftleft(CAST(1 AS BIGINT), CAST(${wBits + 1} - mj AS INT))")),
-          lit(0L)).as("t_present"))
-      .select(lit(m).as("m"),
-        (lit(m) - col("n_present")).as("v_zero"),
-        (col("t_present") +
-          (lit(m) - col("n_present")) * lit(1L << (wBits + 1))).as("t_fx"))
-      .select(col("m"), col("v_zero"), col("t_fx"),
-        expr(s"CAST((CAST($alphaMicro AS DECIMAL(38,0)) * ${m * m} * " +
-          s"${1L << (wBits + 1)}) div t_fx div 1000000 AS BIGINT)")
-          .as("est_raw"))
+  def state[IN: TypeTag, S](sketch: Aggregator[IN, S, _], batch: DataFrame,
+      inputs: Column*): DataFrame = {
+    val enc = ExpressionEncoder[IN]()
+    val names = enc.schema.fieldNames.toSeq
+    val in = batch.select(inputs: _*).toDF(names: _*)
+      .where(names.map(n => col(n).isNotNull).reduce(_ && _))
+    fold(in.as(enc), new StateFold[IN, S](sketch, sketch.reduce))
   }
 
-  // ---------------------------------------------------------------- KMV
+  /** Merge two state tables with the sketch's own `merge`. */
+  def merge[S](sketch: Aggregator[_, S, _])(a: DataFrame,
+      b: DataFrame): DataFrame =
+    fold(a.unionByName(b).as(sketch.bufferEncoder),
+      new StateFold[S, S](sketch, sketch.merge))
 
-  /** KMV bottom-k state of ONE batch: the k smallest distinct 60-bit
-    * hashes, (h) rows — [[Profile.kmvDistinct]]'s sample.
-    */
-  def kmvState(df: DataFrame, keyCol: String, k: Int): DataFrame = {
-    require(k >= 2)
-    df.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull).distinct()
-      .select(Dedup.portableHash(concat(lit("kmv:"), col("key"))).as("h"))
-      .distinct().orderBy(col("h")).limit(k)
-  }
-
-  /** Bottom-k merge: union, dedup, keep the k smallest — the classic
-    * KMV merge (bottom-k of a union = bottom-k of the union of
-    * bottom-ks, since any hash outside a side's bottom-k is dominated
-    * by k smaller ones already in the union).
-    */
-  def mergeKmv(a: DataFrame, b: DataFrame, k: Int): DataFrame =
-    a.unionByName(b).distinct().orderBy(col("h")).limit(k)
-
-  /** Estimate read-off from a (merged) bottom-k state — identical
-    * integer math to [[Profile.kmvDistinct]] minus the exact twin;
-    * returns one row (n_kept, h_k, est_distinct).
-    */
-  def kmvEstimate(state: DataFrame, k: Int): DataFrame =
-    state.agg(count(lit(1)).as("n_kept"), max(col("h")).as("h_k"))
-      .select(col("n_kept"), col("h_k"),
-        when(col("n_kept") < k, col("n_kept")).otherwise(
-          expr(s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * 1152921504606846976)" +
-            " div h_k AS BIGINT)")).as("est_distinct"))
-
-  // ---------------------------------------------------------------- KLL
-
-  /** KLL level-sample state of ONE batch: `cur_level` plus the (lvl, v)
-    * survivor rows at that level — the same (l*, S_l*) state as
-    * [[graft.functions.KllSketch]]'s buffer, as a DataFrame. cur_level
-    * rides on every row (state tables are self-contained parquet; an
-    * empty batch is an empty table, cur_level 0 implicitly).
-    */
-  def kllState(df: DataFrame, valueCol: String, idCol: String,
-      k: Int): DataFrame = {
-    require(k >= 16, s"k must be >= 16, got $k")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val lv = Caching.persist(df
-      .select(col(valueCol).as("v"),
-        Dedup.portableHash(
-          concat(lit("kll:"), col(idCol).cast("string"))).as("h"))
-      .where(col("v").isNotNull && col("h").isNotNull)
-      .select(col("v"),
-        when(col("h") === 0L, lit(60L))
-          .otherwise(lit(60L) - length(ltrim(bin(col("h")), "0")))
-          .as("lvl")))
-    val levels = spark.range(0L, 62L).toDF("l")
-    val sizes = levels
-      .join(broadcast(lv.groupBy(col("lvl")).agg(count(lit(1)).as("c"))),
-        col("lvl") >= col("l"), "left")
-      .groupBy(col("l")).agg(coalesce(sum(col("c")), lit(0L)).as("sz"))
-    val lstar = sizes.where(col("sz") <= k)
-      .agg(min(col("l")).as("ls"))
-    lv.crossJoin(broadcast(lstar)).where(col("lvl") >= col("ls"))
-      .select(col("ls").as("cur_level"), col("lvl"), col("v"))
-  }
-
-  /** Level-sample merge: the new level is the smallest l at or above
-    * both sides' cur_level whose union survivor count fits in k — at
-    * such l the union's (lvl ≥ l) rows are COMPLETE (each side kept
-    * everything at or above its own level), and levels below max
-    * cur_level were already proven over-full on one side's inputs alone,
-    * so this reproduces exactly the full-input state: merge order can
-    * never change the result (the [[graft.functions.KllSketch]] merge,
-    * as relational algebra).
-    */
-  def mergeKll(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
-    val u = Caching.persist(a.unionByName(b))
-    val spark = u.sparkSession
-    import spark.implicits._
-    val levels = spark.range(0L, 62L).toDF("l")
-    val curMax = u.agg(coalesce(max(col("cur_level")), lit(0L)).as("cm"))
-    val sizes = levels
-      .join(broadcast(u.groupBy(col("lvl")).agg(count(lit(1)).as("c"))),
-        col("lvl") >= col("l"), "left")
-      .groupBy(col("l")).agg(coalesce(sum(col("c")), lit(0L)).as("sz"))
-    val lstar = sizes.crossJoin(broadcast(curMax))
-      .where(col("l") >= col("cm") && col("sz") <= k)
-      .agg(min(col("l")).as("ls"))
-    u.crossJoin(broadcast(lstar)).where(col("lvl") >= col("ls"))
-      .select(col("ls").as("cur_level"), col("lvl"), col("v"))
-  }
-
-  /** Quantile read-off from a (merged) level-sample state — identical
-    * type-1 integer-rank math to [[Profile.kllQuantile]]; returns one
-    * row per point (q_pm, est_v, lvl, n_sample).
-    */
-  def kllEstimate(state: DataFrame, qPermille: Seq[Int]): DataFrame = {
-    require(qPermille.nonEmpty && qPermille.forall(q => q >= 1 && q <= 1000),
-      "quantile points are per-mille in [1,1000]")
-    val spark = state.sparkSession
-    import spark.implicits._
-    val ranked = state.select(col("v"), col("cur_level").as("ls"),
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy()).as("n_sample"),
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("v"))).as("rn"))
-    val qs = qPermille.map(_.toLong).toDF("q_pm")
-    ranked.join(broadcast(qs),
-        col("rn") === greatest(lit(1L),
-          expr("(q_pm * n_sample + 999) div 1000")))
-      .select(col("q_pm"), col("v").as("est_v"), col("ls").as("lvl"),
-        col("n_sample"))
-  }
+  /** Read a state table off with the sketch's own `finish`. */
+  def readOff[S, OUT](sketch: Aggregator[_, S, OUT],
+      state: DataFrame): Dataset[OUT] =
+    state.as(sketch.bufferEncoder).map(s => sketch.finish(s))(
+      sketch.outputEncoder)
 
   // ---------------------------------------------------- parquet lifecycle
 

@@ -2,8 +2,11 @@ package graft.queries
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Portable sketch queries (SURVEY.md §2c): KMV / HLL distinct,
   * Misra-Gries heavy hitters, Count-Min, KLL-style quantiles
@@ -162,41 +165,44 @@ object ApproxQueries {
     }),
 
     // --- sketch sidecar merge chain: the corpus split into 3
-    // deterministic ingest batches, each batch reduced to its mergeable
-    // sketch state (HLL registers / KMV bottom-k / KLL level sample) and
-    // folded left-to-right — O(batch) per ingest, and the merged
-    // estimates EQUAL the one-shot full-corpus sketches, which is the
-    // oracle: the full-corpus DuckDB replays (oracle-checked) ---
+    // deterministic ingest batches, each batch folded to its sketch
+    // Aggregator's state (HLL registers / KMV bottom-k / KLL level
+    // sample) and the states merged left-to-right — O(batch) per ingest,
+    // and the merged estimates EQUAL the one-shot full-corpus sketches,
+    // which is the oracle: the full-corpus DuckDB replays
+    // (oracle-checked) ---
     "q_approx_sidecar" -> ((s, d) => {
       Tables.load(s, d)
       val docs = s.table("documents")
       val batches = (0 to 2).map(i =>
         docs.where(pmod(col("doc_id"), lit(3)) === i))
+      import graft.functions.{HllSketch, KllSketch, KmvBottomK}
       import graft.operators.SketchSidecar
-      val hll = SketchSidecar.hllEstimate(
-        batches.map(b => SketchSidecar.hllState(b, "text", p = 8))
-          .reduce(SketchSidecar.mergeHll), p = 8)
-      val kmv = SketchSidecar.kmvEstimate(
-        batches.map(b => SketchSidecar.kmvState(b, "text", k = 64))
-          .reduce((x, y) => SketchSidecar.mergeKmv(x, y, 64)), k = 64)
-      val kll = SketchSidecar.kllEstimate(
-        batches.map(b =>
-            SketchSidecar.kllState(b, "n_chars", "doc_id", k = 256))
-          .reduce((x, y) => SketchSidecar.mergeKll(x, y, 256)),
-        qPermille = Seq(500, 900))
-      def stats(df: org.apache.spark.sql.DataFrame, kind: String,
-          cols: Seq[String]) =
-        cols.map(c => df.select(lit(kind).as("kind"), lit(c).as("stat"),
-          col(c).cast("long").as("val"))).reduce(_ unionByName _)
+      def folded[IN: TypeTag, S, OUT](sketch: Aggregator[IN, S, OUT],
+          inputs: Column*): DataFrame =
+        SketchSidecar.readOff(sketch,
+          batches.map(SketchSidecar.state(sketch, _, inputs: _*))
+            .reduce(SketchSidecar.merge(sketch))).toDF()
+      def hashed(prefix: String, key: String): Column =
+        Dedup.portableHash(concat(lit(prefix), col(key).cast("string")))
+      val hll = folded(new HllSketch(8), hashed("hll:", "text"))
+        .toDF("v_zero", "t_fx", "est_raw")
+      val kmv = folded(new KmvBottomK(64), hashed("kmv:", "text"))
+        .toDF("n_kept", "h_k")
+        .withColumn("est_distinct", KmvBottomK.estimate(64))
+      val kll = folded(new KllSketch(256, Seq(500, 900)),
+          hashed("kll:", "doc_id"), col("n_chars").cast("double"))
+        .select(col("est")(0).as("p500"), col("est")(1).as("p900"),
+          col("n_sample"))
+      // one pass per sketch: its stats leave as (stat, val) rows
+      def stats(df: DataFrame, kind: String, cols: Seq[String]) =
+        df.select(explode(array(cols.map(c =>
+            struct(lit(c).as("stat"), col(c).cast("long").as("val"))): _*))
+          .as("r"))
+          .select(lit(kind).as("kind"), col("r.stat"), col("r.val"))
       stats(hll, "hll", Seq("v_zero", "t_fx", "est_raw"))
-        .unionByName(stats(kmv, "kmv",
-          Seq("n_kept", "h_k", "est_distinct")))
-        .unionByName(kll.select(lit("kll").as("kind"),
-          concat(lit("p"), col("q_pm")).as("stat"),
-          col("est_v").cast("long").as("val")))
-        .unionByName(kll.agg(max(col("n_sample")).as("n"))
-          .select(lit("kll").as("kind"), lit("n_sample").as("stat"),
-            col("n").cast("long").as("val")))
+        .unionByName(stats(kmv, "kmv", Seq("n_kept", "h_k", "est_distinct")))
+        .unionByName(stats(kll, "kll", Seq("p500", "p900", "n_sample")))
     }),
 
     // --- Count-Min sketch point estimates: 3 distinct keys over a 3x64

@@ -96,10 +96,7 @@ object EventStreams {
       .agg(sketch(col("h")).as("s"))
       .select(col("w.start").as("win_start"),
         col("s._1").as("n_kept"), col("s._2").as("h_k"))
-      .withColumn("est_distinct",
-        when(col("n_kept") < k, col("n_kept")).otherwise(
-          expr(s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) *" +
-            " 1152921504606846976) div h_k AS BIGINT)")))
+      .withColumn("est_distinct", graft.functions.KmvBottomK.estimate(k))
   }
 
   /** Streaming variant of [[windowedKmv]]: watermark-bounded window state,

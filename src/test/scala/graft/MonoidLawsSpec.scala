@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.Monoid
+import graft.functions._
+import org.apache.spark.sql.expressions.Aggregator
 import org.scalacheck.Prop.forAll
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * split-invariance of the fold. Associativity is the contract that makes
   * Spark's partial → shuffle → final aggregation of [[ArrayMonoidReduce]]
   * correct at any parallelism (SURVEY.md §5c); the reference relies on it
-  * implicitly via `merge_batch` (reference src/monoid.rs:445-465).
+  * implicitly via `merge_batch` (reference src/monoid.rs:445-465). The
+  * same laws hold for every Aggregator's buffer under (zero, merge) —
+  * the mergeable-summaries guarantee (Agarwal et al., PODS 2012) that
+  * the sketches' shuffle merges and the SketchSidecar fold rely on.
   */
 class MonoidLawsSpec extends AnyFunSuite {
 
@@ -79,6 +83,87 @@ class MonoidLawsSpec extends AnyFunSuite {
     Gen.chooseNum(0L, Long.MaxValue).map(v => BigDecimal(v) * 2))
   laws("minU64 (full u64 range)", Monoid.minU64,
     Gen.chooseNum(0L, Long.MaxValue).map(v => BigDecimal(v) * 2))
+
+  /** The monoid laws for an Aggregator's buffer: `zero` is the identity
+    * of `merge`, `merge` is associative, and merging the states of any
+    * split of the inputs equals the state of the whole. States are
+    * compared through `finish`, and every side is built from fresh
+    * states, because `merge` mutates its left argument (and may return
+    * either one).
+    */
+  private def aggLaws[IN, S, OUT](name: String, agg: Aggregator[IN, S, OUT],
+      gen: Gen[IN]): Unit = {
+    def state(xs: Seq[IN]): S = xs.foldLeft(agg.zero)(agg.reduce)
+    def out(xs: Seq[IN]): OUT = agg.finish(state(xs))
+    val listGen = Gen.choose(0, 100).flatMap(n => Gen.listOfN(n, gen))
+    test(s"$name: identity") {
+      check(forAll(listGen) { xs =>
+        agg.finish(agg.merge(state(xs), agg.zero)) == out(xs) &&
+          agg.finish(agg.merge(agg.zero, state(xs))) == out(xs)
+      })
+    }
+    test(s"$name: associativity") {
+      check(forAll(listGen, listGen, listGen) { (a, b, c) =>
+        agg.finish(agg.merge(agg.merge(state(a), state(b)), state(c))) ==
+          agg.finish(agg.merge(state(a), agg.merge(state(b), state(c))))
+      })
+    }
+    test(s"$name: split-invariance (any partitioning folds equal)") {
+      check(forAll(listGen, Gen.chooseNum(0, 100)) { (xs, cut0) =>
+        val (l, r) = xs.splitAt(cut0 % (xs.length + 1))
+        agg.finish(agg.merge(state(l), state(r))) == out(xs)
+      })
+    }
+  }
+
+  private val hash60: Gen[Long] = Gen.chooseNum(0L, (1L << 60) - 1L)
+
+  // ArrayMonoidReduce: lawful over arrays of ONE length only — merge
+  // keeps the left array's length (reference truncation semantics), so
+  // [1,2] ⊕ [3,4,5] and [3,4,5] ⊕ [1,2] differ; and, as above, integer
+  // sums only where saturation cannot trigger. Null elements (identity)
+  // and null rows (skipped) are in the generator.
+  private def rowsOf[T](g: Gen[T]): Gen[Seq[Option[T]]] =
+    Gen.frequency(1 -> Gen.const(null: Seq[Option[T]]),
+      9 -> Gen.listOfN(4, Gen.option(g)).map(_.toSeq))
+  aggLaws("ArrayMonoidReduce sumLong",
+    new ArrayMonoidReduce[Long](Monoid.sumLong),
+    rowsOf(Gen.chooseNum(-1000000L, 1000000L)))
+  aggLaws("ArrayMonoidReduce maxInt (full range)",
+    new ArrayMonoidReduce[Int](Monoid.maxInt),
+    rowsOf(Gen.chooseNum(Int.MinValue, Int.MaxValue)))
+
+  // The sketches: every state is a pure function of the input multiset,
+  // so the laws hold exactly. Small sizes (p, k, width) make the merges
+  // collide, raise levels and evict within 100 inputs.
+  aggLaws("HllSketch", new HllSketch(4), hash60)
+  aggLaws("KmvBottomK", new KmvBottomK(8),
+    Gen.oneOf(Gen.chooseNum(0L, 40L), hash60)) // repeats + spread
+  aggLaws("KllSketch", new KllSketch(16, Seq(100, 500, 990)),
+    Gen.zip(hash60, Gen.chooseNum(-50.0, 50.0)))
+  aggLaws("KllWeightedSketch", new KllWeightedSketch(16, Seq(100, 500, 990)),
+    Gen.zip(hash60, Gen.chooseNum(-50.0, 50.0),
+      Gen.chooseNum(-2L, 1000L))) // out-of-range weights drop
+  aggLaws("CountMinAgg", new CountMinAgg(3, 8),
+    Gen.frequency(1 -> Gen.const(null: String),
+      9 -> Gen.choose(0, 30).map(i => s"v$i")))
+  // ApproxTopK (Misra–Gries) is exactly associative only in its exact
+  // regime, distinct ≤ k: past k, eviction decrements depend on merge
+  // order (the counterexample is pinned below), while the N/(k+1)
+  // error bound still holds (SketchSpec). Ten values for k = 10.
+  aggLaws("ApproxTopK (distinct <= k)", new ApproxTopK(10),
+    Gen.choose(0, 9).map(i => s"v$i"))
+
+  test("ApproxTopK past k: merge order changes the state") {
+    val agg = new ApproxTopK(1)
+    def st(vs: String*) = vs.foldLeft(agg.zero)(agg.reduce)
+    // {x:2}, {y:1}, {z:1}: folded left, y and z each decrement x away;
+    // folded right, y and z cancel each other before meeting x
+    val left = agg.merge(agg.merge(st("x", "x"), st("y")), st("z"))
+    val right = agg.merge(st("x", "x"), agg.merge(st("y"), st("z")))
+    assert(agg.finish(left) == Seq.empty)
+    assert(agg.finish(right) == Seq(("x", 2L)))
+  }
 
   test("u64 saturation clamps exactly at [0, 2^64-1]") {
     val max = Monoid.maxU64Value

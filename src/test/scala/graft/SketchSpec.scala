@@ -1,7 +1,11 @@
 package graft
 
 import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Approximate sketches have no cross-engine oracle — their contract is an
   * error bound vs the exact answer, asserted here.
@@ -584,6 +588,28 @@ class SketchSpec extends SparkSpec {
         s"n=${g.n}")
   }
 
+  // SketchSidecar over the sketch Aggregators: state of each batch,
+  // merged left-to-right, read off with the sketch's own finish
+  private def hashed(prefix: String, c: String): Column =
+    graft.operators.Dedup.portableHash(
+      concat(lit(prefix), col(c).cast("string")))
+  private def sidecarFold[IN: TypeTag, S, OUT](sketch: Aggregator[IN, S, OUT],
+      batches: Seq[DataFrame], inputs: Column*): DataFrame = {
+    import graft.operators.SketchSidecar
+    SketchSidecar.readOff(sketch,
+      batches.map(SketchSidecar.state(sketch, _, inputs: _*))
+        .reduce(SketchSidecar.merge(sketch))).toDF()
+  }
+  private val sidecarHll = new graft.functions.HllSketch(6)
+  private val sidecarKmv = new graft.functions.KmvBottomK(32)
+  private val sidecarKll = new graft.functions.KllSketch(64, Seq(500, 900))
+  // KLL read-off as (q_pm, est_v, lvl, n_sample) rows, numbers as
+  // doubles so the one-shot operator's long values compare directly
+  private def kllRows(df: DataFrame): Seq[Seq[Double]] =
+    df.select(posexplode(col("est")), col("lvl"), col("n_sample"))
+      .collect().map(r => Seq(Seq(500.0, 900.0)(r.getInt(0)), r.getDouble(1),
+        r.getLong(2).toDouble, r.getLong(3).toDouble)).toSeq
+
   test("SketchSidecar: merged batch states equal the one-shot corpus " +
       "sketches; fold order free; parquet update swap-publishes") {
     import spark.implicits._
@@ -596,34 +622,34 @@ class SketchSpec extends SparkSpec {
       df.where(col("id") % 3 === 2),
       df.limit(0))
     import graft.operators.SketchSidecar
-    // HLL: merged registers read off exactly the one-shot estimate
-    val hllMerged = SketchSidecar.hllEstimate(
-      batches.map(b => SketchSidecar.hllState(b, "key", p = 6))
-        .reduce(SketchSidecar.mergeHll), p = 6)
-      .collect().head.toSeq
+    // HLL: merged registers read off exactly the one-shot estimate (m is
+    // the register count of the state)
+    def hllOut(state: DataFrame): Seq[Any] =
+      state.as(sidecarHll.bufferEncoder).head().length.toLong +:
+        SketchSidecar.readOff(sidecarHll, state).head().productIterator.toSeq
+    val hllState = batches.map(SketchSidecar.state(sidecarHll, _,
+      hashed("hll:", "key"))).reduce(SketchSidecar.merge(sidecarHll))
+    val hllMerged = hllOut(hllState)
     val hllFull = graft.operators.Profile.hllDistinct(df, "key", p = 6)
       .select("m", "v_zero", "t_fx", "est_raw").collect().head.toSeq
     assert(hllMerged == hllFull)
     // KMV: bottom-k of merged bottom-ks = one-shot bottom-k
-    val kmvMerged = SketchSidecar.kmvEstimate(
-      batches.map(b => SketchSidecar.kmvState(b, "key", k = 32))
-        .reduce((x, y) => SketchSidecar.mergeKmv(x, y, 32)), k = 32)
+    val kmvMerged = sidecarFold(sidecarKmv, batches, hashed("kmv:", "key"))
+      .toDF("n_kept", "h_k")
+      .withColumn("est_distinct", graft.functions.KmvBottomK.estimate(32))
       .collect().head.toSeq
     val kmvFull = graft.operators.Profile.kmvDistinct(df, "key", k = 32)
       .select("n_kept", "h_k", "est_distinct").collect().head.toSeq
     assert(kmvMerged == kmvFull)
     // KLL: merged level samples read off the one-shot quantiles, and the
     // fold ORDER cannot matter (associative/commutative state)
-    def kllFold(bs: Seq[org.apache.spark.sql.DataFrame]) =
-      SketchSidecar.kllEstimate(
-        bs.map(b => SketchSidecar.kllState(b, "v", "id", k = 64))
-          .reduce((x, y) => SketchSidecar.mergeKll(x, y, 64)),
-        qPermille = Seq(500, 900))
-        .orderBy("q_pm").collect().map(_.toSeq).toSeq
+    def kllFold(bs: Seq[DataFrame]) = kllRows(sidecarFold(sidecarKll, bs,
+      hashed("kll:", "id"), col("v").cast("double")))
     val kllMerged = kllFold(batches)
     val kllFull = graft.operators.Profile.kllQuantile(
         df, "v", "id", k = 64, qPermille = Seq(500, 900))
-      .orderBy("q_pm").collect().map(_.toSeq).toSeq
+      .orderBy("q_pm").collect()
+      .map(_.toSeq.map(_.toString.toDouble)).toSeq
     assert(kllMerged == kllFull)
     assert(kllFold(batches.reverse) == kllMerged, "fold order must be free")
     // parquet lifecycle: create-then-merge through the sidecar file, the
@@ -631,14 +657,43 @@ class SketchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_sidecar")
       .toString + "/hll_regs"
     batches.foreach(b => SketchSidecar.updateSidecar(dir,
-      SketchSidecar.hllState(b, "key", p = 6), SketchSidecar.mergeHll))
-    val viaFile = SketchSidecar.hllEstimate(spark.read.parquet(dir), p = 6)
-      .collect().head.toSeq
+      SketchSidecar.state(sidecarHll, b, hashed("hll:", "key")),
+      SketchSidecar.merge(sidecarHll)))
+    val viaFile = hllOut(spark.read.parquet(dir))
     assert(viaFile == hllFull,
       "the parquet sidecar after incremental ingests must read off the " +
         "one-shot estimate")
-    // state stays model-sized on disk: ≤ 2^p register rows
-    assert(spark.read.parquet(dir).count() <= 64L)
+    // state stays model-sized on disk: one row of 2^p register bytes,
+    // stored as a plain binary column
+    val onDisk = spark.read.parquet(dir)
+    assert(onDisk.count() == 1L)
+    assert(onDisk.schema.fields.map(_.dataType).toSeq ==
+      Seq(org.apache.spark.sql.types.BinaryType))
+    assert(viaFile.head == 64L)
+  }
+
+  test("SketchSidecar: null keys and values are dropped — a batch reads " +
+      "off the same with or without them") {
+    import spark.implicits._
+    val clean = (1 to 500).map(i => (Option(i.toLong), Option(s"k${i % 170}"),
+      Option((i % 97).toDouble))).toDF("id", "key", "v")
+    def rows(rs: (Option[Long], Option[String], Option[Double])*) =
+      rs.toDF("id", "key", "v")
+    // HLL/KMV read `key`; KLL reads `id` (its row coin) and `v`
+    val nullKeys = rows((Some(9001L), None, Some(5.0)), (None, None, None))
+    val nullIdOrV = rows((Some(9002L), Some("k_extra"), None),
+      (None, Some("k_other"), Some(7.0)), (None, None, None))
+    def same[IN: TypeTag, S, OUT](sketch: Aggregator[IN, S, OUT],
+        extra: DataFrame, inputs: Column*): Unit = {
+      def fold(b: DataFrame) =
+        sidecarFold(sketch, Seq(b), inputs: _*).collect().toSeq
+      assert(fold(clean.unionByName(extra)) == fold(clean))
+      // a batch of nothing but nulls is the empty state
+      assert(fold(extra) == fold(clean.limit(0)))
+    }
+    same(sidecarHll, nullKeys, hashed("hll:", "key"))
+    same(sidecarKmv, nullKeys, hashed("kmv:", "key"))
+    same(sidecarKll, nullIdOrV, hashed("kll:", "id"), col("v"))
   }
 
   test("HllSketch UDAF: out-of-contract hash input fails with the " +
